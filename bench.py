@@ -227,8 +227,9 @@ def main() -> None:
     # source -> watermark -> keyed 1s windows -> foreachBatch sink; lag =
     # sink time - window label, p50/p95/p99 over a 12s run at 1k and 10k
     # events/s (the reference throttles to 20 ev/s; these rates show the
-    # margin). Latency here is window-close dominated: ~1s wait for the
-    # sealing event + trigger interval + batch time.
+    # margin). Latency here is window-close dominated: the source's release
+    # of the sealing event + trigger wait + batch time (the window is sealed
+    # in the micro-batch that reads that event).
     from timing_explorer_spark.streaming.metrics import measure_event_time_lag
 
     latency = {
@@ -247,8 +248,8 @@ def main() -> None:
             # steady state — first 6 s of samples dropped (one-off codegen /
             # state-store-open transients that dominate a ~12-window
             # percentile) over a longer 20 s run. Every entry now also
-            # reports mean/max micro-batch duration so lag ≈ 1000 + trigger
-            # + batch can be separated from host load.
+            # reports mean/max micro-batch duration so lag ≈ sealing-event
+            # release + trigger + batch can be separated from host load.
             measure_event_time_lag(
                 spark, 1_000, run_seconds=20.0, trigger_ms=100, settle_seconds=6.0
             ),

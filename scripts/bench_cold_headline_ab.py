@@ -75,14 +75,19 @@ def main() -> int:
             )
             lines = [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT ")]
             rec = json.loads(lines[-1][len("RESULT "):]) if lines else None
-            out[vname].append(rec)
+            out[vname].append({
+                "returncode": r.returncode,
+                "stderr_tail": r.stderr[-1000:],
+                "times": rec,
+            })
             tot = round(sum(rec.values()), 2) if rec else None
-            print(f"rep {rep} {vname}: total {tot}", flush=True)
+            print(f"rep {rep} {vname}: total {tot} (rc {r.returncode})", flush=True)
     summary = {}
-    for vname, recs in out.items():
-        oks = [r for r in recs if r]
+    for vname, reps_out in out.items():
+        oks = [r["times"] for r in reps_out if r["times"]]
+        summary[vname] = {"failed_reps": len(reps_out) - len(oks)}
         if oks:
-            summary[vname] = {
+            summary[vname] |= {
                 "cold_total_per_rep": [round(sum(r.values()), 3) for r in oks],
                 "cold_total_min": round(min(sum(r.values()) for r in oks), 3),
                 "per_query_min": {

@@ -86,14 +86,16 @@ def test_stateful_window_labels_end_inclusive(spark, stateful_run):
 
 
 class _FakeGroupState:
-    """Minimal GroupState stand-in for unit-testing the proc-time fn."""
+    """Minimal GroupState stand-in for unit-testing the PseudoWindow fns."""
 
-    def __init__(self, now_ms, state=None, timed_out=False):
+    def __init__(self, now_ms=0, state=None, timed_out=False, wm_ms=0):
         self._now = now_ms
+        self._wm = wm_ms
         self._state = state
         self.hasTimedOut = timed_out
         self.removed = False
         self.timeout_duration = None
+        self.timeout_timestamp = None
 
     @property
     def exists(self):
@@ -109,8 +111,14 @@ class _FakeGroupState:
     def update(self, row):
         self._state = row
 
+    def getCurrentWatermarkMs(self):
+        return self._wm
+
     def setTimeoutDuration(self, ms):
         self.timeout_duration = ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_timestamp = ms
 
     def remove(self):
         self._state = None
@@ -151,6 +159,64 @@ def test_proctime_fn_timer_fires_emits_and_clears():
     assert out["key"].tolist() == ["temp"]
     assert int(out["window_end_label"].astype("int64").iloc[0] // 1_000_000) == 1_700_000_000_999
     assert st.removed  # no open windows left
+
+
+E = 1_700_000_001_000  # a window boundary: [E-1000, E) has inclusive end E-1
+
+
+def _rows(*ms):
+    import pandas as pd
+
+    return pd.DataFrame({"ts": pd.to_datetime(list(ms), unit="ms")})
+
+
+def _emitted(out):
+    return [
+        (int(df["window_end_label"].astype("int64").iloc[i] // 1_000_000), int(df["value"].iloc[i]))
+        for df in out
+        for i in range(len(df))
+    ]
+
+
+def test_seal_rule_emits_in_the_call_that_reads_the_sealing_row():
+    """A row stamped at or after E seals [E-1000, E) in the same call,
+    although the watermark is still a batch behind."""
+    from timing_explorer_spark.streaming.stateful import make_pseudo_window_fn
+
+    fn = make_pseudo_window_fn(duration_ms=1000)
+    st = _FakeGroupState(wm_ms=E - 2000)
+    out = list(fn(("temp",), [_rows(E - 900, E - 500), _rows(E + 50)], st))
+    assert _emitted(out) == [(E - 1, 2)]
+    assert st.get == (str(E + 999), "1")  # the sealing row's own window stays open
+    assert st.timeout_timestamp == E + 1000
+
+
+def test_seal_rule_keeps_windows_at_or_above_the_frontier_open():
+    """A window whose inclusive end is not below max(watermark, key's max
+    event time - delay) is not emitted: no row past its end (E-1 is its
+    last millisecond), or one within the watermark delay."""
+    from timing_explorer_spark.streaming.stateful import make_pseudo_window_fn
+
+    st = _FakeGroupState(wm_ms=E - 2000)
+    assert list(make_pseudo_window_fn(1000)(("temp",), [_rows(E - 900, E - 1)], st)) == []
+    assert st.get == (str(E - 1), "2")
+
+    st = _FakeGroupState(wm_ms=E - 2000)
+    fn = make_pseudo_window_fn(1000, delay_ms=100)
+    assert list(fn(("temp",), [_rows(E - 900, E + 50)], st)) == []
+    assert st.get == (f"{E - 1},{E + 999}", "1,1")
+    assert st.timeout_timestamp == E
+
+
+def test_seal_rule_timeout_sweep_emits_on_watermark_only_call():
+    """A key with no rows in the batch still closes its windows when the
+    watermark passes them (the event-time timeout)."""
+    from timing_explorer_spark.streaming.stateful import make_pseudo_window_fn
+
+    st = _FakeGroupState(state=(str(E - 1), "10"), timed_out=True, wm_ms=E)
+    out = list(make_pseudo_window_fn(1000)(("temp",), iter(()), st))
+    assert _emitted(out) == [(E - 1, 10)]
+    assert st.removed
 
 
 def test_proctime_stream_conserves_counts(spark, tmp_path):

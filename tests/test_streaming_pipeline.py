@@ -437,8 +437,10 @@ def test_event_time_lag_bounded_at_reference_rate(spark):
     """The reference's core metric (eventTimeLag histogram at the sink,
     InfluxDBSink.java:38-39,52-53) under the reference's own source rate
     (20 ev/s, TimestampSource PERIOD_MS=100 x 2 keys): lag must stay
-    bounded by window-close dynamics — ~1s wait for the sealing event +
-    trigger interval + batch time — not grow with the run."""
+    bounded by window-close dynamics — the rate source's release of the
+    key's first row past the window end (up to ~1 s after it), then trigger
+    wait + batch time, since the window is sealed in the micro-batch that
+    reads that row — not grow with the run."""
     from timing_explorer_spark.streaming.metrics import measure_event_time_lag
 
     stats = measure_event_time_lag(spark, 20, run_seconds=8.0, trigger_ms=250)

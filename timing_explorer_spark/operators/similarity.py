@@ -112,6 +112,14 @@ def _worker_iter_tiles(corpus_path: str, id_col: str, vec_col: str, tile_rows: i
         yield ids, flat.reshape(rb.num_rows, -1)
 
 
+def _few_tasks(probe: DataFrame) -> DataFrame:
+    """The dense probe on at most defaultParallelism partitions (coalesce,
+    no shuffle): each row's result is independent of partitioning, and
+    every extra partition is one more Python task paying worker setup and
+    its own build-side pass."""
+    return probe.coalesce(probe.sparkSession.sparkContext.defaultParallelism)
+
+
 def nearest_neighbor_all(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -145,8 +153,9 @@ def nearest_neighbor_all(
 
     if tile_rows is not None and corpus_path is None:
         raise ValueError("tile_rows requires corpus_path (worker-side streaming)")
+    probe = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     if corpus_path is None:
-        pdf = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).toPandas()
+        pdf = probe.toPandas()
         ids = pdf["vid"].to_numpy()
         mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
         bc = corpus.sparkSession.sparkContext.broadcast((ids, mat))
@@ -194,7 +203,7 @@ def nearest_neighbor_all(
                 best_id[upd] = t_ids[arg[upd]]
             yield pd.DataFrame({"query_id": qids, "neighbor_id": best_id, "cos": best_cos})
 
-    return corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).mapInPandas(
+    return _few_tasks(probe).mapInPandas(
         top1 if tile_rows is None else top1_tiled,
         schema="query_id long, neighbor_id long, cos double",
     )
@@ -229,8 +238,9 @@ def embedding_neardup_pairs(
 
     if tile_rows is not None and corpus_path is None:
         raise ValueError("tile_rows requires corpus_path (worker-side streaming)")
+    probe = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     if corpus_path is None:
-        pdf = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).toPandas()
+        pdf = probe.toPandas()
         ids = pdf["vid"].to_numpy()
         mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
         bc = corpus.sparkSession.sparkContext.broadcast((ids, mat))
@@ -266,7 +276,7 @@ def embedding_neardup_pairs(
                 if len(r):
                     yield pd.DataFrame({"id_a": qids[r], "id_b": t_ids[c], "cos": cos[r, c]})
 
-    return corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).mapInPandas(
+    return _few_tasks(probe).mapInPandas(
         pairs if tile_rows is None else pairs_tiled,
         schema="id_a long, id_b long, cos double",
     )

@@ -979,12 +979,13 @@ def q_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_docs and n_pos fused into ONE aggregate job (they were two separate
     # count() scans — guide §5); the projection matches the label frame
     # logreg_train pinned, so this reads the cache. y is exactly 0.0/1.0,
-    # so sum(cast long) == the filtered count, bit-for-bit.
+    # so sum(cast long) == the filtered count, bit-for-bit; coalesce keeps
+    # all-NULL labels at 0 positives, as the filtered count was.
     lrow = (
         labels.select("_doc", F.col("y").cast("double").alias("y"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("y").cast("long")).alias("n_pos"),
+            F.coalesce(F.sum(F.col("y").cast("long")), F.lit(0)).alias("n_pos"),
         )
         .collect()[0]
     )

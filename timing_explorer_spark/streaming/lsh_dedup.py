@@ -108,6 +108,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+from .stateful import interval_ms
+
 _SEED = 42  # matches operators/dedup.py::minhash_signatures
 
 # cost-attribution probe knobs (scripts/bench only — NOT a user surface):
@@ -202,15 +204,6 @@ def band_keys(
     band j = xxhash64(slice of r = num_perm/bands slots, j). Shared by the
     streaming operator and its batch replay-parity test."""
     return band_keys_from_sig(row_local_signature(text, num_perm, n), num_perm, bands)
-
-
-def _duration_ms(s: str) -> int:
-    """'10 minutes' / '2 seconds' / '500 milliseconds' -> ms (the subset of
-    Spark's interval grammar the streaming operators here use)."""
-    n, unit = s.strip().split()
-    unit = unit.rstrip("s")
-    factor = {"millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000}[unit]
-    return int(float(n) * factor)
 
 
 # A bucket's occupants re-packed into size-bounded blob rows after this
@@ -807,7 +800,7 @@ def minhash_dedup_stream(
             except ValueError:
                 parts = docs.sparkSession.sparkContext.defaultParallelism
             state_buckets = max(64, 2 * parts)
-        horizon_ms = _duration_ms(watermark)
+        horizon_ms = interval_ms(watermark)
         # Prefilter (r8 task #1): exact-signature duplicates — the bulk of a
         # dup-heavy ingest — are suppressed at DOC grain before banding, so
         # the per-band verify layer processes only distinct-content

@@ -114,8 +114,20 @@ def live_rate_windows(
     """The reference pipeline shape driven by a LIVE wall-clock source: the
     ``rate`` source stamps each row with its generation time, so event time
     is real wall time and sink-side event-time lag is a real latency. Keys
-    round-robin like AssignKeyFunction's two generator instances."""
+    round-robin like AssignKeyFunction's two generator instances.
+
+    Windows go through the keyed-state PseudoWindow
+    (stateful.pseudo_window_stateful), so each (key, window) is emitted in
+    the micro-batch that reads the key's first row past the window end,
+    not one micro-batch later when Spark's watermark catches up. Lag is
+    then the source's release of that row plus trigger wait plus batch
+    time. The seal frontier is per key: when the once-a-second chunk the
+    rate source releases holds only one row past a window end (at 20
+    rows/s over 2 keys, a release offset of ~50-100 ms into the second),
+    the other key's sealing row comes with the next chunk and that key's
+    windows read ~1 s high."""
     from ..session import ensure_confs
+    from .stateful import interval_ms, pseudo_window_stateful
 
     ensure_confs(spark)
     base = (
@@ -127,15 +139,8 @@ def live_rate_windows(
             F.concat(F.lit("key-"), (F.col("value") % n_keys)).alias("key"),
         )
     )
-    return (
-        base.withWatermark("ts", watermark)
-        .groupBy("key", F.window("ts", duration).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "key",
-            (F.col("w.end") - F.expr("INTERVAL 1 MILLISECOND")).alias("window_end_label"),
-            "n_events",
-        )
+    return pseudo_window_stateful(base, interval_ms(duration), watermark).select(
+        "key", "window_end_label", F.col("value").alias("n_events")
     )
 
 
@@ -175,9 +180,10 @@ def measure_event_time_lag(
     original (transient-inclusive) reading.
 
     The returned dict also carries the mean/max micro-batch duration from
-    the query's progress events: the structural lag floor is
-    ~window_size + trigger + batch time, so these let a reader separate
-    scheduling load (batch time) from pipeline latency."""
+    the query's progress events. live_rate_windows seals a window in the
+    micro-batch that reads its sealing row, so past that row's release by
+    the source the lag floor is trigger wait + batch time; these let a
+    reader separate scheduling load (batch time) from pipeline latency."""
     import tempfile
     import time as _time
 
@@ -231,7 +237,7 @@ def measure_event_time_lag(
         "p95_ms": pct(0.95),
         "p99_ms": pct(0.99),
         "max_ms": round(lags[-1], 1) if lags else None,
-        # load context (r13): lag floor ≈ 1000 (window seal) + trigger +
+        # load context: lag floor ≈ sealing-row release + trigger wait +
         # batch time; mean/max batch time tells a reader how much of the
         # percentile is host load rather than pipeline shape.
         "mean_batch_ms": round(sum(batch_ms) / len(batch_ms), 1) if batch_ms else None,

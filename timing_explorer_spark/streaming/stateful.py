@@ -13,8 +13,20 @@ answer for the reference's keyed tumbling count window. This module is the
     (PseudoWindow.java:58-72)
   registerEventTimeTimer(window end)       GroupState.setTimeoutTimestamp
     (PseudoWindow.java:88-90)                (event-time timeout)
-  onTimer: emit KeyedDataPoint, clear key  timeout/watermark sweep: emit rows
-    (PseudoWindow.java:92-99)                with end <= watermark, drop them
+  onTimer: emit KeyedDataPoint, clear key  seal sweep: emit rows with end below
+    (PseudoWindow.java:92-99)                the key's seal frontier, drop them
+
+Seal frontier: max(current watermark, the key's max event time in this
+batch - watermark delay). Spark computes a watermark at the end of one
+micro-batch and applies it in the next, so a window sealed by the watermark
+alone waits for the next data batch. The key's own rows let it leave in the
+batch that read its sealing row instead: the next watermark is at least the
+frontier, so every later row in a window below it is dropped (and counted)
+by Spark's late-row filter, exactly as on the declarative path. The emitted
+rows are the declarative path's; they only arrive earlier. The frontier is
+per key: a key whose own first row past a window end lands in the next
+micro-batch waits for it (or for the watermark), even if another key's row
+past that end was already read.
 
 Window identity matches the reference's end-INCLUSIVE millisecond label:
 ``end = t - t % duration + duration - 1`` (PseudoWindow.java:74-84).
@@ -82,32 +94,48 @@ def _encode(windows: dict[int, int]) -> tuple[str, str]:
     )
 
 
-def make_pseudo_window_fn(duration_ms: int = 1000):
-    """Build the (key, pdf_iter, state) function for applyInPandasWithState."""
+def interval_ms(s: str) -> int:
+    """'10 minutes' / '2 seconds' / '500 milliseconds' -> ms (the subset of
+    Spark's interval grammar the streaming operators here use)."""
+    n, unit = s.strip().split()
+    unit = unit.rstrip("s")
+    factor = {"millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000}[unit]
+    return int(float(n) * factor)
+
+
+def make_pseudo_window_fn(duration_ms: int = 1000, delay_ms: int = 0):
+    """Build the (key, pdf_iter, state) function for applyInPandasWithState;
+    ``delay_ms`` is the watermark delay of the input stream."""
 
     def fn(
         key: tuple[str],
         pdfs: Iterable["pd.DataFrame"],
         state: GroupState,
     ) -> Iterator["pd.DataFrame"]:
+        import numpy as np
         import pandas as pd
 
         windows = _decode(state.get) if state.exists else {}
 
+        # Seal frontier (module docstring): the watermark, or past it the
+        # key's newest event time in this batch less the watermark delay.
+        frontier = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for pdf in pdfs:
+                if pdf.empty:
+                    continue
                 # Bucket each event: end-inclusive window id (PseudoWindow.java:82).
                 ts_ms = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
                 ends = ts_ms - (ts_ms % duration_ms) + duration_ms - 1
-                uniq, cnt = __import__("numpy").unique(ends, return_counts=True)
+                uniq, cnt = np.unique(ends, return_counts=True)
                 for e, c in zip(uniq.tolist(), cnt.tolist()):
                     windows[e] = windows.get(e, 0) + int(c)
+                frontier = max(frontier, int(ts_ms.max()) - delay_ms)
 
-        # Timer sweep (onTimer parity): close every window the watermark has
-        # passed. Watermark is in ms; window end is inclusive, so a window
-        # closes when watermark > end.
-        wm = state.getCurrentWatermarkMs()
-        closed = sorted(e for e in windows if e < wm)
+        # Timer sweep (onTimer parity): close every window the frontier has
+        # passed. Window end is inclusive, so a window closes when
+        # frontier > end.
+        closed = sorted(e for e in windows if e < frontier)
         out = None
         if closed:
             out = pd.DataFrame(
@@ -139,12 +167,14 @@ def pseudo_window_stateful(
 ) -> DataFrame:
     """Keyed tumbling count windows via explicit keyed state + timers —
     output-compatible with pipeline.event_time_windows (same schema, same
-    end-inclusive labels), for backend/declarative parity tests."""
+    end-inclusive labels); a window leaves in the micro-batch that reads
+    its key's sealing row (module docstring). ``sensors`` needs ``key`` and
+    ``ts`` columns."""
     return (
         sensors.withWatermark("ts", watermark)
         .groupBy("key")
         .applyInPandasWithState(
-            make_pseudo_window_fn(duration_ms),
+            make_pseudo_window_fn(duration_ms, interval_ms(watermark)),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
